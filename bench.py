@@ -53,40 +53,50 @@ HEADLINE = [
 ]
 
 #: memoized front-halves (session-scoped localCheckpoint indexes): the
-#: representative consumer that triggers each build, and the memo dict
-#: to clear for a COLD measurement. min-across-passes otherwise reports
+#: representative consumer that triggers each build, and the memo dicts
+#: to clear for a COLD measurement (a family's own memo plus any shared
+#: memo its build reads — the per-snapshot Lloyd centroids — so the
+#: cold wall is not half warm). min-across-passes otherwise reports
 #: only the warm-marginal cost for these families (disclosed in
 #: BASELINE.md; the cold number is what a first-build regression gate
 #: needs).
 MEMO_FAMILIES = {
-    "llm_dedup_apply": "_MANIFEST_MEMO",
-    "llm_dedup_embedding": "_SEM_PAIRS_MEMO",
-    "llm_knn_recall": "_LSH_MONITOR_MEMO",
-    "llm_substring_dup_rate": "_GRAMS4_MEMO",
-    "llm_pq_encode": "_PQ_MEMO",
+    "llm_dedup_apply": ("_MANIFEST_MEMO",),
+    "llm_dedup_embedding": ("_SEM_PAIRS_MEMO",),
+    "llm_knn_recall": ("_LSH_MONITOR_MEMO",),
+    "llm_substring_dup_rate": ("_GRAMS4_MEMO",),
+    "llm_pq_encode": ("_PQ_MEMO",),
     # r10: the near-contamination sketch+verify pass and the resolved
     # three-rung manifest, both shared with llm_curation_pipeline
-    "llm_contamination_near": "_NC_PAIRS_MEMO",
-    "llm_dedup_apply_full": "_FULL_MANIFEST_MEMO",
+    "llm_contamination_near": ("_NC_PAIRS_MEMO",),
+    "llm_dedup_apply_full": ("_FULL_MANIFEST_MEMO", "_LLOYD_CENTS_MEMO"),
     # r12: the centroid-blocked SemDeDup twin's train+verify pass,
     # and the cross-doc ExactSubstr span scan (report + apply share it)
-    "llm_dedup_semantic_centroid": "_CENTROID_PAIRS_MEMO",
-    "llm_exact_substr_spans": "_XSPANS_MEMO",
+    "llm_dedup_semantic_centroid": ("_CENTROID_PAIRS_MEMO",),
+    "llm_exact_substr_spans": ("_XSPANS_MEMO",),
     # r13: the 2-probe centroid twin (the frontier's operative form)
-    "llm_dedup_semantic_centroid2": "_CENTROID2_PAIRS_MEMO",
+    "llm_dedup_semantic_centroid2": ("_CENTROID2_PAIRS_MEMO", "_LLOYD_CENTS_MEMO"),
     # r14: the incremental semantic tier's index-side build (chooser
     # train + dispatched new×indexed candidate/verify pass)
-    "llm_dedup_incremental_semantic": "_INC_SEM_MEMO",
+    "llm_dedup_incremental_semantic": ("_INC_SEM_MEMO",),
     # r15: the lexical classifier relation (corpus banding + verified
     # best match per new doc), shared by both incremental dedup rows
     # and the incremental curation manifest
-    "llm_dedup_incremental": "_INC_CLASSIFY_MEMO",
+    "llm_dedup_incremental": ("_INC_CLASSIFY_MEMO",),
     # r16: the spark.ml approxSimilarityJoin reference pair set of the
     # near_ml cross-check (verdict r15 item 7's admissible
     # optimization: persist the model's transformed signatures under
     # the same memo discipline; output hash unchanged)
-    "llm_dedup_near_ml": "_ML_PAIRS_MEMO",
+    "llm_dedup_near_ml": ("_ML_PAIRS_MEMO",),
 }
+
+
+def release_family(qname: str) -> None:
+    """Unpersist and clear every memo of one MEMO_FAMILIES entry."""
+    from heroku_kafka_connect_spark.operators import llm
+
+    for attr in MEMO_FAMILIES[qname]:
+        llm.release_memo(getattr(llm, attr))
 
 
 def execute(df) -> None:
@@ -321,14 +331,12 @@ def main() -> None:
     # re-run its representative consumer once — cold_build records
     # index-build + query cost so regression gating sees first-build
     # walls, not just the cache-warm marginal the min-of-N reports.
-    from heroku_kafka_connect_spark.operators import llm as _llm
-
     # release_memo (not bare .clear()) unpersists the checkpointed
     # relations first — clearing alone orphans their executor blocks
     # until GC, skewing later cold timings under memory pressure.
     cold: dict[str, float] = {}
-    for qname, memo_attr in MEMO_FAMILIES.items():
-        _llm.release_memo(getattr(_llm, memo_attr))
+    for qname in MEMO_FAMILIES:
+        release_family(qname)
         t0 = time.time()
         execute(qs[qname].fn(spark, sf_dir))
         cold[qname] = round(time.time() - t0, 3)

@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import configure
+
 ENV_PREFIX = "CONNECTOR_"
 NAMES_VAR = "CONNECTOR_NAMES"
 
@@ -304,7 +306,10 @@ class SparkRuntime(QueryRuntime):
     validating a config and spawning tasks, §3.2)."""
 
     def __init__(self, spark: SparkSession, *, checkpoint_root: str) -> None:
-        self.spark = spark
+        # configure ships this package to the Python workers (the Avro
+        # converter's pandas UDF imports it there) and pins the session
+        # invariants; idempotent, so a pre-configured session is fine
+        self.spark = configure(spark)
         self.checkpoint_root = checkpoint_root
         self._fingerprints: dict[str, str] = {}
 

@@ -562,11 +562,13 @@ def llm_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     join resolves each doc through its exact canon to that canon's
     cluster. Edges here are the oracle-checkable exact-Jaccard pairs
     (`_ngram_pairs`); production feeds MinHash LSH pairs instead —
-    the manifest shape is edge-source-agnostic. Wall-clock note: most
-    of this query's local cost is the CC rounds' driver-coordinated
-    latency (a few checkpoint+probe actions), which is constant in
-    corpus size — the data-proportional work is one window shuffle,
-    one blocked pair join, and two manifest joins."""
+    the manifest shape is edge-source-agnostic. Wall-clock note: CC
+    on an edge list of up to `llmops.CC_LOCAL_MAX_EDGES` pairs is two
+    Spark jobs (edge checkpoint + one bounded collect, finished on the
+    driver), so the cold cost is the data-proportional work — one
+    window shuffle, one blocked pair join, and two manifest joins —
+    rather than the per-round latency of the distributed CC loops,
+    which only larger pair lists pay."""
     t = load_tables(spark, sf_dir)
     return _dedup_manifest_for(spark, sf_dir, t.documents)
 
@@ -2075,6 +2077,7 @@ def _centroid2_pairs(
     threshold: float = SEM_THRESHOLD,
     iters: int = KMEANS_ITERS,
     probe: int | None = None,
+    cents: DataFrame | None = None,
 ) -> DataFrame:
     """2-PROBE centroid-blocked exact cosine pairs: candidates are
     pairs whose TOP-2 centroid sets (vs the FINAL trained centroids)
@@ -2098,12 +2101,20 @@ def _centroid2_pairs(
     (`llmops.coarse_rank_centroids`), replacing the n·k broadcast rank
     with the n·√k flat-IVF envelope. The sampled branch is pytest-
     gated on planted-clone recall (tests/test_round15_ops.py) and
-    measured in SCALING_CURVES `sampled_trainer`."""
+    measured in SCALING_CURVES `sampled_trainer`.
+
+    ``cents`` takes already-trained exact-Lloyd centroids for this k
+    (k ≤ KMEANS_EXACT_MAX_K, where they are exactly what
+    `kmeans_sampled` would train) — the per-snapshot
+    `_lloyd_cents_for` memo the blocking chooser shares."""
     from ..functions.vectors import dot, norm
 
     if probe is None:
         probe = _centroid_probe_for(k)
-    cents, coarse = llmops.kmeans_sampled(embeddings, k=k, iters=iters)
+    if cents is None:
+        cents, coarse = llmops.kmeans_sampled(embeddings, k=k, iters=iters)
+    else:
+        coarse = None
     v = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -2161,10 +2172,39 @@ def _centroid2_pairs_for(
     if key not in _CENTROID2_PAIRS_MEMO:
         _evict_stale(_CENTROID2_PAIRS_MEMO, key)
         k = _centroid_k_for(_n_embeddings(sf_dir))
-        _CENTROID2_PAIRS_MEMO[key] = _centroid2_pairs(embeddings, k).localCheckpoint(
-            eager=True
+        cents = (
+            _lloyd_cents_for(spark, sf_dir, embeddings, k)
+            if k == CHOOSER_K <= llmops.KMEANS_EXACT_MAX_K
+            else None
         )
+        _CENTROID2_PAIRS_MEMO[key] = _centroid2_pairs(
+            embeddings, k, cents=cents
+        ).localCheckpoint(eager=True)
     return _CENTROID2_PAIRS_MEMO[key]
+
+
+#: (applicationId, realpath, fingerprint, k, iters) -> checkpointed
+#: exact-Lloyd centroids (cid, cv). ONE train per corpus snapshot,
+#: shared by the blocking chooser (`_blocking_choice_for`) and the
+#: 2-probe centroid leg (`_centroid2_pairs_for`) when their k agree —
+#: k = CHOOSER_K = 8 at every corpus of up to 2,048 vectors. The
+#: oracles replay the same single chain (`_sem_dispatch_ctes`).
+_LLOYD_CENTS_MEMO: dict[tuple, DataFrame] = {}
+
+
+def _lloyd_cents_for(
+    spark: SparkSession,
+    sf_dir: str,
+    embeddings: DataFrame,
+    k: int,
+    iters: int = KMEANS_ITERS,
+) -> DataFrame:
+    key = _memo_key(spark, sf_dir) + (k, iters)
+    if key not in _LLOYD_CENTS_MEMO:
+        _evict_stale(_LLOYD_CENTS_MEMO, key)
+        _, cents = llmops.kmeans_lloyd(embeddings, k=k, iters=iters)
+        _LLOYD_CENTS_MEMO[key] = cents.localCheckpoint(eager=True)
+    return _LLOYD_CENTS_MEMO[key]
 
 
 def _centroid2_pair_ctes(kprefix: str = "", probe: int = 2) -> str:
@@ -2265,6 +2305,8 @@ def llm_dedup_semantic_centroid2(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the mass and centroid blocking inherits the hot-bucket quadratic.
 CHOOSER_SIL_MIN = 0.18
 CHOOSER_MAXSHARE_MAX = 0.5
+#: k of the chooser's probe k-means (the "trained-k8" above)
+CHOOSER_K = 8
 
 
 def _chooser_ctes(kprefix: str = "") -> str:
@@ -2324,7 +2366,7 @@ def _chooser_ctes(kprefix: str = "") -> str:
     """
 
 
-def _blocking_chooser_oracle(k: int = 8) -> str:
+def _blocking_chooser_oracle(k: int = CHOOSER_K) -> str:
     return (
         "WITH "
         + _kmeans_assign_ctes(k=k)
@@ -2335,7 +2377,10 @@ def _blocking_chooser_oracle(k: int = 8) -> str:
 
 
 def semantic_blocking_choice(
-    embeddings: DataFrame, k: int = 8, iters: int = KMEANS_ITERS
+    embeddings: DataFrame,
+    k: int = CHOOSER_K,
+    iters: int = KMEANS_ITERS,
+    cents: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus-SHAPE chooser for the semantic dedup rung (the r12
     SCALE.md revision made executable): r12 measured that centroid
@@ -2364,8 +2409,10 @@ def semantic_blocking_choice(
     inputs. Scale: one kmeans_lloyd train (k broadcast centroids per
     round), one n×k broadcast top-2 pass, two tiny aggs — O(n·k),
     the price of ONE Lloyd round, amortized against choosing an
-    n^1.42-vs-n·k blocking wrongly."""
-    _, cents = llmops.kmeans_lloyd(embeddings, k=k, iters=iters)
+    n^1.42-vs-n·k blocking wrongly. ``cents`` takes the already-
+    trained centroids of this (k, iters) train (`_lloyd_cents_for`)."""
+    if cents is None:
+        _, cents = llmops.kmeans_lloyd(embeddings, k=k, iters=iters)
     v = embeddings.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
     )
@@ -2465,8 +2512,8 @@ def _sem_dispatch_ctes(sf_dir: str) -> str:
     engine runs only the chosen generator."""
     planes, tables = _emb_lsh_geometry_for(sf_dir)
     kc = _centroid_k_for(_n_embeddings(sf_dir))
-    parts = [_kmeans_assign_ctes(k=8), ",", _chooser_ctes()]
-    if kc == 8:
+    parts = [_kmeans_assign_ctes(k=CHOOSER_K), ",", _chooser_ctes()]
+    if kc == CHOOSER_K:
         cb = ""
     else:
         cb = "cb"
@@ -2636,8 +2683,9 @@ def _blocking_choice_for(spark: SparkSession, sf_dir: str):
     if key not in _BLOCKING_CHOICE_MEMO:
         _evict_stale(_BLOCKING_CHOICE_MEMO, key)
         t = load_tables(spark, sf_dir)
+        cents = _lloyd_cents_for(spark, sf_dir, t.embeddings, CHOOSER_K)
         _BLOCKING_CHOICE_MEMO[key] = semantic_blocking_choice(
-            t.embeddings
+            t.embeddings, cents=cents
         ).collect()[0]
     return _BLOCKING_CHOICE_MEMO[key]
 

@@ -50,6 +50,25 @@ def test_spec_compiles_and_runs_pipeline(spark, tmp_path):
     assert all(r.pipeline == "p1" for r in out)
 
 
+def test_runtime_configures_session_and_ships_package(spark, tmp_path, monkeypatch):
+    """SparkRuntime runs session.configure: the package is shipped to
+    the Python workers (the shipped-package marker is set), so the
+    Avro converter's pandas UDF imports outside the repo root too. The
+    marker is cleared first and addPyFile recorded, so the test sees
+    this constructor do the shipping rather than an earlier caller."""
+    sc = spark.sparkContext
+    marker = "_hkc_package_shipped"
+    monkeypatch.delattr(sc, marker, raising=False)
+    shipped: list[str] = []
+    monkeypatch.setattr(sc, "addPyFile", shipped.append)
+    SparkRuntime(spark, checkpoint_root=str(tmp_path / "cp"))
+    assert getattr(sc, marker, False)
+    assert len(shipped) == 1 and shipped[0].endswith("heroku_kafka_connect_spark.zip")
+    # idempotent: a second runtime on the same session ships nothing
+    SparkRuntime(spark, checkpoint_root=str(tmp_path / "cp2"))
+    assert len(shipped) == 1
+
+
 def test_stop_missing_query_is_success(spark, tmp_path):
     """DELETE on an already-gone query is success, not an error to
     retry (the reference treats 404 the same way, main.sh:130-141) —

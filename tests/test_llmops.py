@@ -241,14 +241,17 @@ def test_connected_components_shapes(spark):
     assert got2 == got
 
 
-def test_two_star_matches_label_prop_on_random_graphs(spark):
+def test_two_star_matches_label_prop_on_random_graphs(spark, monkeypatch):
     """Property: the alternating large-star/small-star algorithm and
     min-label propagation produce identical (node → component) maps —
     checked against a pure-Python union-find ground truth — on seeded
     random graphs and the diameter-adversarial cases (path graphs,
     where propagation needs O(n) rounds but two-star needs O(log² n);
     max_iter=6 on the 40-path pins that two-star really converges
-    fast, it cannot be propagation in disguise)."""
+    fast, it cannot be propagation in disguise). Runs on both sides of
+    the local-finish bound: at the default every case finishes on the
+    driver; with the bound at 0 every non-empty case runs the
+    distributed loops."""
     import random
 
     def union_find(edge_list):
@@ -278,21 +281,62 @@ def test_two_star_matches_label_prop_on_random_graphs(spark):
     cases.append([(i, i + 1) for i in range(10)] + [(50, 51)])
     cases.append([(7, 7), (1, 2)])                          # self-loop node
 
-    for edge_list in cases:
-        edges = spark.createDataFrame(edge_list, "a long, b long")
-        truth = union_find(edge_list)
-        lp = {
-            r.node: r.component
-            for r in llmops.connected_components(edges, max_iter=60).collect()
-        }
-        ts = {
-            r.node: r.component
-            for r in llmops.connected_components(
-                edges, algorithm="two_star", max_iter=6
-            ).collect()
-        }
-        assert lp == truth, edge_list
-        assert ts == truth, edge_list
+    for bound in (llmops.CC_LOCAL_MAX_EDGES, 0):
+        monkeypatch.setattr(llmops, "CC_LOCAL_MAX_EDGES", bound)
+        for edge_list in cases:
+            edges = spark.createDataFrame(edge_list, "a long, b long")
+            truth = union_find(edge_list)
+            lp = {
+                r.node: r.component
+                for r in llmops.connected_components(edges, max_iter=60).collect()
+            }
+            ts = {
+                r.node: r.component
+                for r in llmops.connected_components(
+                    edges, algorithm="two_star", max_iter=6
+                ).collect()
+            }
+            assert lp == truth, (bound, edge_list)
+            assert ts == truth, (bound, edge_list)
+
+
+def test_connected_components_empty_and_id_type(spark):
+    """An empty edge list gives an empty (node, component) relation,
+    and int32 ids stay int32 through the local finish."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    out = llmops.connected_components(spark.createDataFrame([], "a long, b long"))
+    assert out.columns == ["node", "component"]
+    assert [f.dataType for f in out.schema.fields] == [LongType(), LongType()]
+    assert out.collect() == []
+
+    edges = spark.createDataFrame([(5, 3), (3, 9), (20, 21)], "a int, b int")
+    out = llmops.connected_components(edges)
+    assert [f.dataType for f in out.schema.fields] == [IntegerType(), IntegerType()]
+    assert {r.node: r.component for r in out.collect()} == {
+        3: 3, 5: 3, 9: 3, 20: 20, 21: 20
+    }
+
+
+def test_connected_components_small_graph_job_count(spark):
+    """Below the bound CC costs the edge checkpoint and the bounded
+    collect — at most 2 Spark jobs, counted from the status store
+    (the distributed loops start about ten per round)."""
+    import uuid
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (7, 8)], "a long, b long"
+    )
+    for alg in ("label_prop", "two_star"):
+        group = f"cc-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            llmops.connected_components(edges, algorithm=alg)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, alg
 
 
 def test_ffd_bin_packing_invariants(spark):

@@ -256,11 +256,10 @@ def _noop(df) -> None:
 
 
 def release_all_memos() -> None:
-    from bench import MEMO_FAMILIES
-    from heroku_kafka_connect_spark.operators import llm
+    from bench import MEMO_FAMILIES, release_family
 
-    for attr in MEMO_FAMILIES.values():
-        llm.release_memo(getattr(llm, attr))
+    for qname in MEMO_FAMILIES:
+        release_family(qname)
 
 
 # ----------------------------------------------------------- family runners

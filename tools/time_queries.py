@@ -39,15 +39,14 @@ def main() -> None:
     execute(qs["rel_agg_pricing_summary"].fn(spark, args.sf))
     execute(qs["udf_scalar_pandas"].fn(spark, args.sf))
 
-    from heroku_kafka_connect_spark.operators import llm as _llm
-    from bench import MEMO_FAMILIES  # noqa: E402
+    from bench import MEMO_FAMILIES, release_family  # noqa: E402
 
     for name in args.names:
         walls = []
         for _ in range(args.n):
             if args.cold:
-                for attr in MEMO_FAMILIES.values():
-                    _llm.release_memo(getattr(_llm, attr))
+                for qname in MEMO_FAMILIES:
+                    release_family(qname)
             spark.sparkContext.setJobDescription(f"time:{name}")
             t0 = time.time()
             execute(qs[name].fn(spark, args.sf))
